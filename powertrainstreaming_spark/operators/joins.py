@@ -12,14 +12,13 @@ are left to Catalyst/AQE, which broadcast them while they fit.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from powertrainstreaming_spark.scratch import scratch_dir
 from powertrainstreaming_spark.functions.exprs import money_sum, o_money_sum
 from powertrainstreaming_spark.plans.registry import query
+from powertrainstreaming_spark.session import scoped_confs
 from powertrainstreaming_spark.sources.loaders import load
 
 _Q3_CUTOFF = "1998-06-15"
@@ -489,23 +488,6 @@ def merge_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Runtime bloom-filter prefilter (the 100 TB selective-dim join pattern)
 
 
-@contextmanager
-def _scoped_confs(spark: SparkSession, confs: dict[str, str]):
-    """Set runtime SQL confs, restore previous values on exit — a query
-    function must never leak conf changes into the shared session."""
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 _BLOOM_CONFS = {
     # Inject a bloom filter built from the filtered creation side into
     # the application side's scan, pre-shuffle.
@@ -562,7 +544,7 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     at action time, not plan-build time.
     """
     out = scratch_dir(prefix="pts_bloom_join_")
-    with _scoped_confs(spark, _BLOOM_CONFS):
+    with scoped_confs(spark, _BLOOM_CONFS):
         _bloom_join_df(spark, sf_dir).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out).select(
         "p_brand", "p_type", "n_items", "revenue"

@@ -33,6 +33,7 @@ from powertrainstreaming_spark.streaming.harness import (
     events_stream,
     run_bounded,
     staged_events_stream,
+    start_stream,
 )
 
 # Worker-side callables in this module are shipped pickled BY VALUE, so
@@ -1056,13 +1057,12 @@ def stream_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(out)
 
-    q = (
+    start_stream(
+        spark,
         sdf.writeStream.foreachBatch(_clean_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(out, "_checkpoint"))
-        .start()
-    )
-    q.awaitTermination()
+        .option("checkpointLocation", os.path.join(out, "_checkpoint")),
+    ).awaitTermination()
     return spark.read.parquet(out).select(
         "doc_id", "n_tokens", "n_removed", "clean_text"
     )

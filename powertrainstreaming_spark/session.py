@@ -10,6 +10,7 @@ SQL conf the determinism contract needs (SURVEY.md §4 pinned configs,
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -49,6 +50,23 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
                 "events.parquet reads and timestamp determinism depend on it."
             )
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime SQL confs, restore previous values on exit — a query
+    function must never leak conf changes into the shared session."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

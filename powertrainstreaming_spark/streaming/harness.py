@@ -8,6 +8,22 @@ query here replays a bounded file source (the events fixture) with
 emits exactly the batch answer, so tumbling/sliding/session windows
 and dedup hash-check against plain SQL.
 
+Every streaming query the package starts goes through ``start_stream``.
+It sizes the query's state partitions to the cores that run them:
+``min(spark.sql.shuffle.partitions, sparkContext.defaultParallelism)``.
+Each state partition is one state-store task that writes and commits
+its own delta file on every trigger, so partitions beyond the core
+count add commit work without adding parallelism.  The rule is applied
+only around ``start()``: Spark clones the session for the query there
+and records the count in the checkpoint's offset log, so batch plans
+on the session keep the configured value.  The DataFrames a
+``foreachBatch`` function receives belong to the query's clone, so
+their plans run at the lowered count too.  A query restarted from an
+existing checkpoint keeps the count that checkpoint recorded, whatever
+the session says.  The conf is swapped on the shared session for the
+duration of ``start()``, so it is not safe while another thread runs
+queries on the same session.
+
 Scale note: the memory sink is the *test* sink only.  The production
 path for 100 TB streams is ``writeStream.foreachBatch`` into
 partitioned parquet (see ``stream_foreachbatch_sink``) — state stays
@@ -22,9 +38,10 @@ import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from powertrainstreaming_spark.scratch import scratch_dir
-from powertrainstreaming_spark.session import ensure_session_confs
+from powertrainstreaming_spark.session import ensure_session_confs, scoped_confs
 from powertrainstreaming_spark.sources.loaders import (
     events_ddl,
     shim_events_ts,
@@ -97,6 +114,20 @@ def staged_events_stream(spark: SparkSession, stage_dir: str) -> DataFrame:
     return shim_events_ts(sdf, stage_dir)
 
 
+def start_stream(spark: SparkSession, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer``'s query with its state partitions sized to the
+    session's cores (the module docstring gives the rule).
+
+    ``spark.sql.shuffle.partitions`` is lowered to the rule's value for
+    the ``start()`` call only and restored afterwards, also when
+    ``start()`` raises.
+    """
+    key = "spark.sql.shuffle.partitions"
+    parts = min(int(spark.conf.get(key)), spark.sparkContext.defaultParallelism)
+    with scoped_confs(spark, {key: str(parts)}):
+        return writer.start()
+
+
 def run_bounded(
     transformed: DataFrame,
     output_mode: str = "complete",
@@ -105,14 +136,18 @@ def run_bounded(
 
     ``Trigger.AvailableNow`` processes everything currently in the
     source then stops; the memory sink table holds the final answer.
+    Each run starts a new query on a fresh temporary checkpoint, so
+    through ``start_stream`` it always runs at
+    ``min(spark.sql.shuffle.partitions, defaultParallelism)`` state
+    partitions; the session's conf is back to its old value on return.
     """
+    spark = transformed.sparkSession
     name = f"pts_mem_{next(_MEMORY_SINK_COUNTER)}"
-    query = (
+    start_stream(
+        spark,
         transformed.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return transformed.sparkSession.table(name)
+        .trigger(availableNow=True),
+    ).awaitTermination()
+    return spark.table(name)

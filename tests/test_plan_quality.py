@@ -176,10 +176,10 @@ def test_runtime_bloom_filter_reaches_fact_scan(spark):
     from powertrainstreaming_spark.operators.joins import (
         _BLOOM_CONFS,
         _bloom_join_df,
-        _scoped_confs,
     )
+    from powertrainstreaming_spark.session import scoped_confs
 
-    with _scoped_confs(spark, _BLOOM_CONFS):
+    with scoped_confs(spark, _BLOOM_CONFS):
         plan = _plan(_bloom_join_df(spark, SF), "simple")
     assert "might_contain" in plan
     assert "bloom_filter_agg" in plan

@@ -49,10 +49,13 @@ from powertrainstreaming_spark.operators.streaming import (
     tumbling_transform,
     watermark_late_transform,
 )
+from powertrainstreaming_spark.session import scoped_confs
+from powertrainstreaming_spark.sources.loaders import table_path
 from powertrainstreaming_spark.streaming.harness import (
     run_bounded,
     stage_events_nway,
     staged_events_stream,
+    start_stream,
 )
 
 # (transform, output_mode, copies, sink-collapse) — every stateful §2.10
@@ -370,3 +373,135 @@ def test_stream_span_dedup_equals_batch_span_dedup(spark):
     b = {tuple(r) for r in batch.collect()}
     assert s == b
     assert streamed.count() == len(s)  # no duplicate emissions
+
+
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+
+
+def _shuffle_partitions(spark, n: int):
+    return scoped_confs(spark, {_SHUFFLE_KEY: str(n)})
+
+
+def _state_partitions(query) -> set[int]:
+    return {
+        op.numShufflePartitions
+        for p in query.recentProgress
+        for op in p.stateOperators
+    }
+
+
+def test_start_stream_sizes_state_partitions_and_restores_conf(
+    spark, monkeypatch
+):
+    """A new stream's state partitions follow
+    min(spark.sql.shuffle.partitions, defaultParallelism); the session's
+    conf is restored after the run and also when start() raises.  The
+    conf is set above the core count so the rule has to lower it."""
+    from pyspark.errors import AnalysisException
+
+    from powertrainstreaming_spark.streaming import harness
+
+    started = []
+
+    def capture(spark_, writer):
+        query = start_stream(spark_, writer)
+        started.append(query)
+        return query
+
+    monkeypatch.setattr(harness, "start_stream", capture)
+    cores = spark.sparkContext.defaultParallelism
+    configured = cores + 4
+    with _shuffle_partitions(spark, configured):
+        stage = stage_events_nway(SF, 2)
+        run_bounded(session_transform(staged_events_stream(spark, stage)))
+        assert _state_partitions(started[-1]) == {min(configured, cores)}
+        assert spark.conf.get(_SHUFFLE_KEY) == str(configured)
+
+        # An append-mode aggregate without a watermark fails analysis
+        # inside start().
+        with pytest.raises(AnalysisException):
+            run_bounded(
+                tumbling_transform(staged_events_stream(spark, stage)), "append"
+            )
+        assert spark.conf.get(_SHUFFLE_KEY) == str(configured)
+
+
+def test_restart_keeps_checkpoint_state_partitions(spark, tmp_path):
+    """A stateful foreachBatch stream first started outside start_stream
+    records the configured partition count in its checkpoint, like an
+    existing deployment.  Restarted through start_stream with a new
+    input slice, it keeps that count — the rule never re-partitions
+    existing state — and its output equals the DuckDB oracle over all
+    slices, so the state came back intact."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from powertrainstreaming_spark.operators.streaming import _TUMBLING_ORACLE
+    from powertrainstreaming_spark.testing import compare, oracle_connection
+
+    table = pq.read_table(table_path(SF, "events"))
+    half = table.num_rows // 2
+    stage = str(tmp_path / "in")
+    os.makedirs(stage)
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def writer():
+        sdf = staged_events_stream(spark, stage)
+
+        def write_batch(batch_df, batch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(out)
+
+        return (
+            tumbling_transform(sdf)
+            .writeStream.foreachBatch(write_batch)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+        )
+
+    configured = spark.sparkContext.defaultParallelism + 4
+    with _shuffle_partitions(spark, configured):
+        pq.write_table(table.slice(0, half), os.path.join(stage, "a.parquet"))
+        first = writer().start()
+        assert first.awaitTermination(300)
+        assert _state_partitions(first) == {configured}
+
+        pq.write_table(table.slice(half), os.path.join(stage, "b.parquet"))
+        restarted = start_stream(spark, writer())
+        assert restarted.awaitTermination(300)
+        assert _state_partitions(restarted) == {configured}
+
+    con = oracle_connection(SF)
+    res, _, _ = compare(
+        "restart", spark.read.parquet(out), con, _TUMBLING_ORACLE
+    )
+    con.close()
+    assert res.ok, res
+
+
+_STATEFUL_STREAM_OPS = [
+    "stream_session_window",
+    "stream_dedup",
+    "stream_watermark_late",
+    "stream_tumbling_agg",
+    "stream_sliding_agg",
+    "stream_stateful_running",
+    "stream_scd2_changes",
+]
+
+
+@pytest.mark.parametrize("name", _STATEFUL_STREAM_OPS)
+def test_stateful_stream_ops_match_oracle_at_one_partition(spark, name):
+    """The stateful stream ops give their oracle's answer with all state
+    in one partition; the gate's run covers the core-count end."""
+    from powertrainstreaming_spark.plans.registry import all_defs
+    from powertrainstreaming_spark.testing import compare, oracle_connection
+
+    qd = all_defs()[name]
+    con = oracle_connection(SF)
+    with _shuffle_partitions(spark, 1):
+        res, _, _ = compare(name, qd.fn(spark, SF), con, qd.oracle)
+    con.close()
+    assert res.ok, res
